@@ -199,62 +199,61 @@ def compact_partitioned(
     backup and lose the dataset)."""
     from .commit import exclusive_lock
 
-    with exclusive_lock(spark, path, purpose="compact_partitioned"):
-        return _compact_partitioned_locked(
-            spark, path, partition_cols, max_records_per_file,
-            cluster_by, cluster_bits,
+    def write_staging(df: DataFrame, staging: str) -> None:
+        if cluster_by:
+            from .operators.layout import add_zorder_key
+
+            shaped = (
+                add_zorder_key(df, cluster_by, bits=cluster_bits)
+                .repartition(*[F.col(c) for c in partition_cols])
+                .sortWithinPartitions(*partition_cols, "__zorder")
+                .drop("__zorder")
+            )
+        else:
+            shaped = df.repartition(*[F.col(c) for c in partition_cols])
+        (
+            shaped.write.mode("errorifexists")
+            .option("maxRecordsPerFile", max_records_per_file)
+            .partitionBy(*partition_cols)
+            .parquet(staging)
         )
 
+    with exclusive_lock(spark, path, purpose="compact_partitioned"):
+        return _swap_root(spark, path, write_staging)
 
-def _compact_partitioned_locked(
-    spark: SparkSession,
-    path: str,
-    partition_cols: list[str],
-    max_records_per_file: int = 1_000_000,
-    cluster_by: list[str] | None = None,
-    cluster_bits: int = 12,
-) -> str:
+
+def _swap_root(spark: SparkSession, path: str, write_staging) -> str:
+    """The whole-root stage + two-rename swap shared by the compaction
+    paths; the caller holds ``commit.exclusive_lock`` on ``path``.
+
+    Heals a prior swap that crashed between its two renames (dataset
+    parked in backup, staging complete) BEFORE reading — also clearing a
+    stale staging root that would fail an errorifexists write — then
+    calls ``write_staging(df, staging)`` with the live dataset, renames
+    the live root out to ``<path>.pre-compact`` and staging in, rolling
+    the original back if the swap-in fails (never leave the path
+    empty). Returns the backup path."""
     staging = path.rstrip("/") + ".compact-staging"
     backup = path.rstrip("/") + ".pre-compact"
     fs, hpath, jvm = _fs_and_path(spark, path)
     Path = jvm.org.apache.hadoop.fs.Path
-    # a crash between the two swap renames of a PRIOR compaction leaves
-    # the dataset parked in backup with staging complete — roll it back
-    # before reading, or this run would compact an empty/missing root
     _heal_interrupted_swaps(fs, Path, path, staging, backup)
-    df = spark.read.parquet(path)
-    if cluster_by:
-        from .operators.layout import add_zorder_key
-
-        shaped = (
-            add_zorder_key(df, cluster_by, bits=cluster_bits)
-            .repartition(*[F.col(c) for c in partition_cols])
-            .sortWithinPartitions(*partition_cols, "__zorder")
-            .drop("__zorder")
-        )
-    else:
-        shaped = df.repartition(*[F.col(c) for c in partition_cols])
-    (
-        shaped.write.mode("errorifexists")
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy(*partition_cols)
-        .parquet(staging)
-    )
+    write_staging(spark.read.parquet(path), staging)
     if not fs.rename(hpath, Path(backup)):
         raise IOError(f"compaction swap failed: could not move {path} aside")
     if not fs.rename(Path(staging), hpath):
-        # put the original back before failing — never leave the path empty
         fs.rename(Path(backup), hpath)
         raise IOError(f"compaction swap failed: could not move {staging} in")
     return backup
 
 
-def compact_gate_index(
-    spark: SparkSession,
-    index_dir: str,
-    reserved_batch: int = -1,
-    target_files: int = 1,
-) -> str:
+# compact_gate_index's target layout: one file under batch=-1 (why -1:
+# see its docstring)
+_COMPACTED_BATCH = -1
+_COMPACTED_FILES = 1
+
+
+def compact_gate_index(spark: SparkSession, index_dir: str) -> str:
     """Compact a streaming-gate state dataset (the batch=<id>-partitioned
     signature/doc sinks of streaming/neardedup.py and linededup.py's
     out_dir) into a single reserved partition.
@@ -262,14 +261,14 @@ def compact_gate_index(
     Those sinks grow one ``batch=<id>`` partition per micro-batch
     forever — append-shaped for retry-idempotence, but after 10k batches
     the gate's index scan pays 10k directory listings and ≥10k file
-    footers. Collapsing history into ``batch=<reserved_batch>`` keeps
+    footers. Collapsing history into one file under ``batch=-1`` keeps
     the layout identical for readers (same partition column, same
-    schema) while bounding file count; ``reserved_batch`` defaults to -1
-    because foreachBatch batch_ids are non-negative, so no future retry
-    can dynamic-overwrite the compacted partition. Run it between
-    streaming triggers (availableNow cadence) or against a quiesced
-    query — the swap itself is the same two-rename used by
-    compact_partitioned (readers see old or new, never a mix).
+    schema) while bounding file count; -1 because foreachBatch
+    batch_ids are non-negative, so no future retry can dynamic-overwrite
+    the compacted partition. Run it between streaming triggers
+    (availableNow cadence) or against a quiesced query — the swap itself
+    is the same two-rename used by compact_partitioned (readers see old
+    or new, never a mix).
 
     Returns the backup path holding the pre-compaction dataset (caller
     deletes after verifying the gate still answers identically).
@@ -296,38 +295,20 @@ def compact_gate_index(
         pass  # FS probe is best-effort; the read below surfaces real errors
     from .commit import exclusive_lock
 
-    # loser-aborts mutex: two jobs compacting the same gate index would
-    # otherwise interleave the two-rename swap and lose a dataset
-    with exclusive_lock(spark, index_dir, purpose="compact_gate_index"):
-        staging = index_dir.rstrip("/") + ".compact-staging"
-        backup = index_dir.rstrip("/") + ".pre-compact"
-        fs, hpath, jvm = _fs_and_path(spark, index_dir)
-        Path = jvm.org.apache.hadoop.fs.Path
-        # heal a prior compaction that crashed between its two swap
-        # renames (index parked in backup, staging complete) BEFORE
-        # reading — also clears a stale staging that would otherwise
-        # fail the errorifexists write below
-        _heal_interrupted_swaps(fs, Path, index_dir, staging, backup)
-        df = spark.read.parquet(index_dir)
-        data_cols = [c for c in df.columns if c != "batch"]
+    def write_staging(df: DataFrame, staging: str) -> None:
         (
-            df.select(*data_cols)
-            .withColumn("batch", F.lit(int(reserved_batch)))
-            .repartition(target_files)
+            df.select(*[c for c in df.columns if c != "batch"])
+            .withColumn("batch", F.lit(_COMPACTED_BATCH))
+            .repartition(_COMPACTED_FILES)
             .write.mode("errorifexists")
             .partitionBy("batch")
             .parquet(staging)
         )
-        if not fs.rename(hpath, Path(backup)):
-            raise IOError(
-                f"index compaction failed: could not move {index_dir} aside"
-            )
-        if not fs.rename(Path(staging), hpath):
-            fs.rename(Path(backup), hpath)
-            raise IOError(
-                f"index compaction failed: could not move {staging} in"
-            )
-        return backup
+
+    # loser-aborts mutex: two jobs compacting the same gate index would
+    # otherwise interleave the two-rename swap and lose a dataset
+    with exclusive_lock(spark, index_dir, purpose="compact_gate_index"):
+        return _swap_root(spark, index_dir, write_staging)
 
 
 def verify_archive(
@@ -496,99 +477,54 @@ def remove_from_index(
     deletes the backup after verifying."""
     from .commit import exclusive_lock
 
+    nothing = {
+        "removed_rows": 0,
+        "affected_batches": [],
+        "emptied_batches": [],
+        "backup": None,
+    }
     with exclusive_lock(spark, index_dir, purpose="remove_from_index"):
-        return _remove_from_index_locked(spark, index_dir, ids, id_col)
-
-
-def _remove_from_index_locked(
-    spark: SparkSession, index_dir: str, ids, id_col: str
-) -> dict:
-    if isinstance(ids, DataFrame):
-        ids_df = ids.select(F.col(ids.columns[0]).alias("_rm_id")).distinct()
-    else:
-        ids = list(ids)
-        if not ids:
-            return {
-                "removed_rows": 0,
-                "affected_batches": [],
-                "emptied_batches": [],
-                "backup": None,
-            }
-        ids_df = spark.createDataFrame(
-            [(i,) for i in ids], ["_rm_id"]
-        ).distinct()
-    fs, _, jvm = _fs_and_path(spark, index_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
-    backup_root = index_dir.rstrip("/") + ".pre-remove"
-    staging_root = index_dir.rstrip("/") + ".rm-staging"
-    # a prior removal that crashed between its two swap renames left the
-    # partition parked in backup — roll it back BEFORE reading, or its
-    # rows are invisible to this run and stay lost
-    _heal_interrupted_swaps(fs, Path, index_dir, staging_root, backup_root)
-    idx = spark.read.option("mergeSchema", "true").parquet(index_dir)
-    if id_col not in idx.columns:
-        raise ValueError(
-            f"remove_from_index: {index_dir} has no column {id_col!r} "
-            f"(columns: {idx.columns})"
-        )
-    if "batch" not in idx.columns:
-        raise ValueError(
-            f"remove_from_index: {index_dir} is not a batch=<id> gate "
-            "index; for linededup's v=<N> frequency snapshots use "
-            "remove_docs_from_line_index"
-        )
-    affected = sorted(
-        r["batch"]
-        for r in idx.join(
-            ids_df, idx[id_col] == ids_df["_rm_id"], "left_semi"
-        )
-        .select("batch")
-        .distinct()
-        .collect()
-    )
-    if not affected:
-        return {
-            "removed_rows": 0,
-            "affected_batches": [],
-            "emptied_batches": [],
-            "backup": None,
-        }
-    removed = 0
-    emptied = []
-    for b in affected:
-        part = f"{index_dir.rstrip('/')}/batch={_escape_part_value(b)}"
-        pdf = spark.read.parquet(part)
-        remaining = pdf.join(
-            ids_df, pdf[id_col] == ids_df["_rm_id"], "left_anti"
-        )
-        n_before = pdf.count()
-        n_after = remaining.count()
-        removed += n_before - n_after
-        backup = Path(f"{backup_root}/batch={_escape_part_value(b)}")
-        fs.mkdirs(Path(backup_root))
-        if n_after == 0:
-            # emptied: move the partition to the backup, write nothing
-            fs.delete(backup, True)
-            if not fs.rename(Path(part), backup):
-                raise IOError(f"remove_from_index: rename {part} failed")
-            emptied.append(b)
-            continue
-        staging = f"{staging_root}/batch={_escape_part_value(b)}"
-        fs.delete(Path(staging), True)
-        remaining.write.mode("errorifexists").parquet(staging)
-        fs.delete(backup, True)
-        if not fs.rename(Path(part), backup):
-            raise IOError(f"remove_from_index: rename {part} failed")
-        if not fs.rename(Path(staging), Path(part)):
-            raise IOError(
-                f"remove_from_index: swap-in for {part} failed; data is "
-                f"in {backup}"
+        if isinstance(ids, DataFrame):
+            ids_df = ids.select(
+                F.col(ids.columns[0]).alias("_rm_id")
+            ).distinct()
+        else:
+            ids = list(ids)
+            if not ids:
+                return nothing
+            ids_df = spark.createDataFrame(
+                [(i,) for i in ids], ["_rm_id"]
+            ).distinct()
+        fs, _, jvm = _fs_and_path(spark, index_dir)
+        Path = jvm.org.apache.hadoop.fs.Path
+        backup_root = index_dir.rstrip("/") + ".pre-remove"
+        staging_root = index_dir.rstrip("/") + ".rm-staging"
+        # a prior removal that crashed between its two swap renames left
+        # the partition parked in backup — roll it back BEFORE reading,
+        # or its rows are invisible to this run and stay lost
+        _heal_interrupted_swaps(fs, Path, index_dir, staging_root, backup_root)
+        idx = spark.read.option("mergeSchema", "true").parquet(index_dir)
+        if id_col not in idx.columns:
+            raise ValueError(
+                f"remove_from_index: {index_dir} has no column {id_col!r} "
+                f"(columns: {idx.columns})"
             )
-    fs.delete(Path(staging_root), True)
+        if "batch" not in idx.columns:
+            raise ValueError(
+                f"remove_from_index: {index_dir} is not a batch=<id> gate "
+                "index; for linededup's v=<N> frequency snapshots use "
+                "remove_docs_from_line_index"
+            )
+        removed, matched, emptied = _swap_remove_matches(
+            spark, fs, Path, index_dir, idx, ids_df, id_col,
+            staging_root, backup_root,
+        )
+    if not matched:
+        return nothing
     return {
         "removed_rows": removed,
-        "affected_batches": [int(b) for b in affected],
-        "emptied_batches": [int(b) for b in emptied],
+        "affected_batches": sorted(int(p["batch"]) for p in matched),
+        "emptied_batches": sorted(int(p["batch"]) for p in emptied),
         "backup": backup_root,
     }
 
@@ -745,33 +681,43 @@ def _swap_remove_matches(
     fs,
     Path,
     root: str,
+    ds: DataFrame,
     names_df: DataFrame,
     id_col: str,
     staging_root: str,
     backup_root: str,
-) -> int:
-    """Shared rewrite leg of takedown: remove every row whose ``id_col``
-    matches ``names_df`` from the dataset at ``root``, rewriting ONLY
-    the partitions that hold matches (stage + two-rename swap per
-    partition; a partition left empty is renamed out; an unpartitioned
-    dataset is rewritten whole-root, kept readable-empty rather than
-    removed). Partition levels come from `_partition_layout`, so the
-    same code serves the archive's (filetype, nite, batch) layout, the
-    r11 nite-partitioned registry, legacy unpartitioned registries, and
-    pre-r10 archives without the batch leg. Cost therefore scales with
-    the matched partitions, not the dataset — the property that keeps a
-    takedown O(request) when the registry is billions of rows
-    (VERDICT r10 item 2). Returns rows removed."""
+) -> tuple[int, list, list]:
+    """The per-partition stage + two-rename swap shared by
+    remove_from_index and both takedown legs: remove every row of ``ds``
+    (the dataset read from ``root``) whose ``id_col`` matches
+    ``names_df``, rewriting ONLY the partitions that hold matches
+    (staging written, live partition renamed out to backup, staging
+    renamed in; a partition left empty is renamed out and nothing is
+    written; an unpartitioned dataset is rewritten whole-root, kept
+    readable-empty rather than removed). Partition levels come from
+    `_partition_layout`, so the same code serves the gate indexes'
+    batch=<id> layout, the archive's (filetype, nite, batch) layout, the
+    nite-partitioned registry, unpartitioned registries, and archives
+    without the batch leg. Cost therefore scales with the matched
+    partitions, not the dataset — the property that keeps a takedown
+    O(request) when the registry is billions of rows. The caller holds
+    the exclusive lock and has healed interrupted swaps before reading
+    ``ds``. Returns (rows removed, matched partitions, emptied
+    partitions); partitions are Rows of the partition columns, in
+    processing order."""
     name_col = names_df.columns[0]
-    ds = spark.read.option("mergeSchema", "true").parquet(root)
     hit = ds.join(names_df, ds[id_col] == names_df[name_col], "left_semi")
     part_cols = _partition_layout(fs, Path, root)
     parts = (
-        hit.select(*part_cols).distinct().collect()
+        sorted(
+            hit.select(*part_cols).distinct().collect(),
+            key=lambda r: tuple((v is None, v) for v in r),
+        )
         if part_cols
         else ([None] if hit.limit(1).count() else [])
     )
     removed = 0
+    emptied = []
     for p in parts:
         rel = (
             "/".join(f"{c}={_escape_part_value(p[c])}" for c in part_cols)
@@ -790,22 +736,26 @@ def _swap_remove_matches(
         fs.mkdirs(backup.getParent())
         fs.delete(backup, True)
         if n_after == 0 and part_cols:
-            # emptied partition: rename out, write nothing (a dataset
-            # root, by contrast, stays as an empty readable relation)
+            # emptied partition: rename out, write nothing (a dynamic
+            # overwrite cannot replace a partition with nothing; a
+            # dataset root, by contrast, stays as an empty readable
+            # relation)
             if not fs.rename(Path(part), backup):
-                raise IOError(f"takedown: rename {part} failed")
+                raise IOError(f"partition swap: rename {part} failed")
+            emptied.append(p)
             continue
         staging = f"{staging_root}/{rel}" if rel else staging_root
         fs.delete(Path(staging), True)
         remaining.write.mode("errorifexists").parquet(staging)
         if not fs.rename(Path(part), backup):
-            raise IOError(f"takedown: rename {part} failed")
+            raise IOError(f"partition swap: rename {part} failed")
         if not fs.rename(Path(staging), Path(part)):
             raise IOError(
-                f"takedown: swap-in for {part} failed; data is in {backup}"
+                f"partition swap: swap-in for {part} failed; data is in "
+                f"{backup}"
             )
     fs.delete(Path(staging_root), True)
-    return removed
+    return removed, parts, emptied
 
 
 def takedown(
@@ -836,9 +786,9 @@ def takedown(
        since the metadata is gone with the bytes);
     2. ARCHIVE — only the (filetype, nite, batch) partitions holding
        matches are rewritten (stage + two-rename swap; emptied
-       partitions removed outright) — the remove_from_index device
-       generalized to the archive's layout. Partition values are
-       re-escaped the way Spark escapes them into dir names
+       partitions removed outright) — the per-partition swap
+       remove_from_index uses, over the archive's layout. Partition
+       values are re-escaped the way Spark escapes them into dir names
        (``_escape_part_value``), and each leg first heals any swap a
        prior run crashed INSIDE of (``_heal_interrupted_swaps``:
        backup restored when staging proves the swap was interrupted),
@@ -856,13 +806,12 @@ def takedown(
 
     Both data-plane legs rewrite ONLY matched partitions
     (`_swap_remove_matches` + the filesystem layout probe): the archive
-    by its (filetype, nite, batch) layout, the registry — written
-    nite-partitioned since r11 — by nite, so cost scales with the
-    takedown request, not the dataset (at 100× the registry is billions
-    of rows; a whole-relation rewrite per takedown was the r10 scale
-    gap). A legacy unpartitioned registry still works: the layout probe
-    returns no partition levels and the leg falls back to the
-    whole-root swap. Returns per-surface counts."""
+    by its (filetype, nite, batch) layout, the registry — which ingest
+    writes nite-partitioned — by nite, so cost scales with the takedown
+    request, not the dataset (at 100× the registry is billions of rows).
+    A registry written before ingest partitioned it still works: the
+    layout probe returns no partition levels and the leg falls back to
+    the whole-root swap. Returns per-surface counts."""
     from .commit import exclusive_lock
 
     if isinstance(filenames, DataFrame):
@@ -957,9 +906,9 @@ def takedown(
                     ).mode("append").parquet(quarantine_path)
                     out["quarantined"] = len(removed_meta)
                 out["archive_removed"] = _swap_remove_matches(
-                    spark, fs, Path, archive_root, names_df, "filename",
-                    staging_root, backup_root,
-                )
+                    spark, fs, Path, archive_root, arch, names_df,
+                    "filename", staging_root, backup_root,
+                )[0]
 
         if registry_path:
             with exclusive_lock(spark, registry_path, purpose="takedown"):
@@ -968,16 +917,18 @@ def takedown(
                 _heal_interrupted_swaps(
                     fs, Path, registry_path, reg_staging, reg_backup
                 )
-                # r11: registries are written nite-partitioned, so this
+                # registries are written nite-partitioned, so this
                 # rewrites only the nite partitions holding matches —
-                # the leg's cost now tracks the takedown request, not
-                # the registry size (legacy unpartitioned registries
-                # fall back to the whole-root swap automatically via
-                # the filesystem layout probe)
-                out["registry_removed"] = _swap_remove_matches(
-                    spark, fs, Path, registry_path, names_df, "filename",
-                    reg_staging, reg_backup,
+                # the leg's cost tracks the takedown request, not the
+                # registry size (an unpartitioned registry falls back to
+                # the whole-root swap via the filesystem layout probe)
+                reg = spark.read.option("mergeSchema", "true").parquet(
+                    registry_path
                 )
+                out["registry_removed"] = _swap_remove_matches(
+                    spark, fs, Path, registry_path, reg, names_df,
+                    "filename", reg_staging, reg_backup,
+                )[0]
 
         for index_dir, id_col in gate_indexes:
             res = remove_from_index(spark, index_dir, names_df, id_col=id_col)

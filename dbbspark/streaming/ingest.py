@@ -24,12 +24,12 @@ most one micro-batch. The notify-delete ack (`:198,293`) is subsumed by
 (b)+(c) — re-presenting an ingested file classifies it as a duplicate.
 The multi-sink batch is not atomic, but the DATA-PLANE sinks are
 crash-replay idempotent: the archive write is partitioned by a
-deterministic per-batch token (`batch=<token>` — the streaming epoch id
-under foreachBatch; an order-independent content hash of the batch's
-data names in cron/replay mode) and written with dynamic-partition
-OVERWRITE, so a replay after a crash between the archive write and the
-(deliberately last) registry append replaces its own crashed attempt's
-rows instead of appending them twice — the same files-first/index-last
+deterministic per-batch token (`batch=<token>` — an order-independent
+content hash of the batch's data names, in streaming and cron/replay
+mode alike) and written with dynamic-partition OVERWRITE, so a replay
+after a crash between the archive write and the (deliberately last)
+registry append replaces its own crashed attempt's rows instead of
+appending them twice — the same files-first/index-last
 discipline the dedup gate family uses (streaming/mediadedup.py,
 streaming/linededup.py). The registry stays exactly-once via the
 duplicate gate + append-last ordering. The quarantine sink alone stays
@@ -226,28 +226,6 @@ def classify_pairs(
     return df.withColumn("reject_reason", reason).drop("_registered")
 
 
-def _registry_partitioned(spark: SparkSession, path: str) -> bool:
-    """True iff the registry at `path` should be written nite-partitioned:
-    a not-yet-created registry (new default) or one already carrying
-    nite= partition dirs. A legacy registry holding data files at its
-    root keeps appending unpartitioned — a mixed layout is unreadable.
-    One FileSystem listing, via the JVM layer so hdfs://-s3a:// paths
-    behave like local ones (same rationale as `_registry_names`)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return True
-    has_root_data = False
-    for s in fs.listStatus(p):
-        name = s.getPath().getName()
-        if s.isDirectory() and name.startswith("nite="):
-            return True
-        if not s.isDirectory() and not name.startswith(("_", ".")):
-            has_root_data = True
-    return not has_root_data
-
-
 def _batch_token(classified: DataFrame) -> str:
     """Deterministic, order/partition-independent token for a batch:
     a commutative hash-sum over the batch's data names (+ row count), so
@@ -268,20 +246,17 @@ def _write_sinks(
     classified: DataFrame,
     cfg: IngestConfig,
     task_id: str | None,
-    batch_token: str | None = None,
 ) -> IngestResult:
     """Fan the classified batch into archive + registry + quarantine.
 
-    ``batch_token`` keys the archive/quarantine dynamic-partition
-    overwrite (crash-replay idempotence, module docstring); both the
-    streaming and cron/replay paths derive a content token (explicit
-    tokens are honored but must be globally unique — see ingest_batch)."""
+    The content-hash ``_batch_token`` keys the archive dynamic-partition
+    overwrite (crash-replay idempotence, module docstring); the
+    streaming and cron/replay paths all go through here."""
     classified = classified.withColumn(
         "task_id", F.lit(task_id).cast("string")
     ).persist()
     try:
-        if batch_token is None:
-            batch_token = _batch_token(classified)
+        batch_token = _batch_token(classified)
         valid = classified.where(F.col("reject_reason").isNull())
         rejected = classified.where(F.col("reject_reason").isNotNull())
 
@@ -371,15 +346,10 @@ def _write_sinks(
         # already contains the batch's own files and misclassify them as
         # duplicates.
         #
-        # r11: written PARTITIONED BY nite, so takedown/compaction can
+        # Written PARTITIONED BY nite, so takedown/compaction can
         # rewrite only the matched nite partitions instead of the whole
-        # relation (at 100 TB the registry is billions of rows; a
-        # whole-relation rewrite per takedown was the r10 scale gap). A
-        # registry that already exists UNPARTITIONED keeps appending
-        # unpartitioned — mixing data files at the root with nite= dirs
-        # would make the dataset unreadable; takedown's layout probe
-        # handles either form.
-        reg_writer = valid.select(
+        # relation (at 100 TB the registry is billions of rows).
+        valid.select(
             F.col("data_name").alias("filename"),
             "md5sum",
             "filesize",
@@ -387,11 +357,7 @@ def _write_sinks(
             "nite",
             F.col("delivery_ts").alias("delivery_date"),
             "task_id",
-        ).write.mode("append")
-        spark = classified.sparkSession
-        if _registry_partitioned(spark, cfg.registry_path):
-            reg_writer = reg_writer.partitionBy("nite")
-        reg_writer.parquet(cfg.registry_path)
+        ).write.mode("append").partitionBy("nite").parquet(cfg.registry_path)
         return IngestResult(
             archived=archived,
             quarantined=sum(by_reason.values()),
@@ -406,20 +372,14 @@ def ingest_batch(
     cfg: IngestConfig,
     task_id: str | None = None,
     notify_df: DataFrame | None = None,
-    batch_token: str | None = None,
 ) -> IngestResult:
     """One ingest pass over the stage-in area (the cron-invoked batch,
     ST1). Idempotent two ways: a second run after SUCCESS classifies
     everything as duplicates and appends nothing to archive or registry;
     a replay after a CRASH between the archive write and the registry
-    append derives the same content-hash ``batch_token`` and its dynamic
+    append derives the same content-hash batch token and its dynamic
     overwrite replaces the crashed attempt's archive rows (both tested
-    in tests/test_ingest.py). Streaming derives the same content token
-    (an explicit epoch-style token remains supported for callers with
-    their own globally-unique batch ids, but epoch ids that can restart
-    at 0 — checkpoint resets, multiple streams on one archive — must
-    NOT be used: token reuse dynamic-overwrites a prior batch's
-    partition)."""
+    in tests/test_ingest.py). Streaming derives the same content token."""
     # Persist the paired batch: the valid/missing union and the
     # per-filetype metadata branches each re-derive from it, and without a
     # cache every branch re-reads the stage-in files (measured 3× file
@@ -430,7 +390,7 @@ def ingest_batch(
     ).persist()
     try:
         classified = classify_pairs(spark, cfg, pairs)
-        return _write_sinks(classified, cfg, task_id, batch_token=batch_token)
+        return _write_sinks(classified, cfg, task_id)
     finally:
         pairs.unpersist()
 
@@ -466,11 +426,11 @@ def start_ingest_stream(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         notify = parse_notify_binary(batch_df)
-        # batch_token=None => the content-hash token (_batch_token) is
-        # derived inside _write_sinks, exactly as in the cron path. The
-        # epoch id (f"b{batch_id}") is NOT a safe token here: epoch ids
-        # restart at 0 after a checkpoint reset, and two streams sharing
-        # one archive root each count from 0 — a later batch writing the
+        # The content-hash token (_batch_token) is derived inside
+        # _write_sinks, exactly as in the cron path. The epoch id
+        # (f"b{batch_id}") is NOT a safe token: epoch ids restart at 0
+        # after a checkpoint reset, and two streams sharing one archive
+        # root each count from 0 — a later batch writing the
         # same (filetype, nite, batch=b0) leaf would dynamic-overwrite
         # (silently DELETE) the earlier batch's archived rows while the
         # registry still listed them. The content token is globally

@@ -60,11 +60,9 @@ SAME batch_id):
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..commit import (
-    _commits_dir,
     commit_snapshot,
     committed_versions,
     prune_commit_records,
@@ -111,120 +109,6 @@ def _snapshot_batches(
     return out
 
 
-def _has_protocol_state(spark: SparkSession, root: str) -> bool:
-    """True when ``root`` has ever seen the versioned protocol (any
-    ``v=`` dir or a ``_commits`` log — committed or not). Gates the
-    flat-layout fallback: a crashed FIRST commit must read as an empty
-    index, never as "flat layout, read the root" (VERDICT r6 scenario
-    A: partition discovery over the root would surface the crashed
-    attempt's rows as the prior index)."""
-    fs, hroot, jvm = _fs_and_path(spark, root)
-    if not fs.exists(hroot):
-        return False
-    for st in fs.listStatus(hroot):
-        name = st.getPath().getName()
-        if name == "_commits" or name == "_staging" or name.startswith("v="):
-            return True
-    return False
-
-
-def _legacy_style_dirs(spark: SparkSession, root: str) -> list[int]:
-    """``v=<n>`` dirs in the pre-protocol (r6-era) SHAPE: ``_SUCCESS``
-    plus data files directly inside, NO ``batch=<id>`` partition subdir.
-    A protocol snapshot always nests its rows under a single
-    ``batch=<id>`` dir (`_commit_for_batch` partitions by it), so the
-    shape distinguishes legacy dirs even once a partially-completed
-    migration has created the ``_commits`` log (ADVICE r8, medium —
-    the old no-log test read a half-migrated dir as "not legacy" and
-    silently dropped the unmigrated tail)."""
-    fs, hroot, jvm = _fs_and_path(spark, root)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(hroot):
-        return []
-    out = []
-    for st in fs.listStatus(hroot):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("v=")):
-            continue
-        try:
-            n = int(name[2:])
-        except ValueError:
-            continue
-        if not fs.exists(Path(st.getPath(), "_SUCCESS")):
-            continue
-        if any(
-            e.isDirectory() and e.getPath().getName().startswith("batch=")
-            for e in fs.listStatus(st.getPath())
-        ):
-            continue  # protocol snapshot (or foreign copy of one)
-        out.append(n)
-    return sorted(out)
-
-
-def _unmigrated_legacy(spark: SparkSession, root: str) -> list[int]:
-    """Legacy-style snapshot ids whose counts the commit protocol has
-    NOT yet adopted: all of them when nothing is committed, else those
-    EXCEEDING the max committed batch id — the missing tail of a
-    migration that crashed between its two commits (ADVICE r8, medium).
-    Legacy ids at or below the max committed batch are already-migrated
-    (or superseded) orphans; they read as [] here and are swept by the
-    next `migrate_legacy_index` call."""
-    legacy = _legacy_style_dirs(spark, root)
-    if not legacy:
-        return []
-    committed = [b for _, b in _snapshot_batches(spark, root)]
-    if not committed:
-        return legacy
-    mx = max(committed)
-    return [n for n in legacy if n > mx]
-
-
-def migrate_legacy_index(spark: SparkSession, index_dir: str) -> dict[str, list[int]]:
-    """In-place upgrade of a pre-protocol gate dir (ADVICE r7, medium):
-    re-commit the newest TWO legacy ``v=<batch_id>`` snapshots through
-    the commit protocol (two, not one — the retry-predecessor invariant
-    must survive migration: a stream resuming on a crashed checkpoint
-    re-runs its last batch id and resolves the snapshot BEFORE it), then
-    delete the legacy dirs. The ``<index>.bloom`` sibling migrates too
-    when it has legacy state. Returns ``{root: [batch ids committed by
-    THIS call]}`` per root that had legacy dirs (ADVICE r8, low — the
-    bloom sibling's migration is reported, not folded into the index
-    root's); idempotent: a fully-migrated dir returns ``{}``.
-
-    Crash-safe and RESUMABLE (ADVICE r8, medium): commits land in
-    ascending batch order before any legacy dir is deleted, and a re-run
-    detects legacy-style dirs by SHAPE (`_legacy_style_dirs`) rather
-    than by the absence of a ``_commits`` log — so a crash between the
-    two commits leaves a dir the re-run finishes (it commits exactly the
-    legacy ids above the max committed batch, preserving version/batch
-    monotonicity for resolution) instead of a half-migrated index whose
-    newest counts are silently lost. A crash after the commits but
-    before the deletes leaves orphan legacy dirs that resolution ignores
-    and the re-run sweeps."""
-    migrated: dict[str, list[int]] = {}
-    for root in (index_dir, _bloom_root(index_dir)):
-        legacy = _legacy_style_dirs(spark, root)
-        if not legacy:
-            continue
-        pending = _unmigrated_legacy(spark, root)
-        # fresh migration: the newest two carry the invariant; a resumed
-        # one commits only the missing tail (ascending — slot order must
-        # follow batch order or `_resolve_snapshot`'s (version, batch)
-        # max would prefer the older batch)
-        todo = sorted(set(legacy[-2:]) & set(pending))
-        for n in todo:
-            df = spark.read.parquet(f"{root.rstrip('/')}/v={n}")
-            if "batch" in df.columns:  # defensive: never double-tag
-                df = df.drop("batch")
-            _commit_for_batch(spark, root, df, n)
-        fs, _, jvm = _fs_and_path(spark, root)
-        Path = jvm.org.apache.hadoop.fs.Path
-        for n in legacy:
-            fs.delete(Path(f"{root.rstrip('/')}/v={n}"), True)
-        migrated[root] = todo
-    return migrated
-
-
 def _resolve_snapshot(
     spark: SparkSession, root: str, before: int | None
 ) -> str | None:
@@ -249,33 +133,12 @@ def index_df(
     whose BATCH id is < before — the retry path must resolve the
     PREDECESSOR snapshot, never one a crashed attempt of the same batch
     already committed (reading the batch's own counts back would double
-    them). When the protocol has ever touched the dir but no snapshot
-    qualifies, the index is empty by definition — never fall through to
-    reading the root. The flat-root read is ONLY for a true
-    pre-versioning layout (data files, no ``v=`` dirs, no commit log).
+    them). When no committed snapshot qualifies the index is empty by
+    definition, even if a crashed attempt left staged rows behind.
     Filesystem errors propagate — an unreachable index is an error, not
     an empty index."""
-    if _unmigrated_legacy(spark, index_dir):
-        # pre-protocol v=<batch_id>+_SUCCESS snapshots the commit
-        # protocol has not adopted (ADVICE r7/r8, medium): either a
-        # never-migrated dir, or a migration that crashed between its
-        # two commits (the committed prefix WOULD resolve below, and
-        # the newest legacy counts would silently vanish — the gate
-        # would re-admit known boilerplate). Refuse either way;
-        # migrate_legacy_index finishes the job idempotently.
-        raise RuntimeError(
-            f"{index_dir}: legacy pre-protocol index snapshots present "
-            "(v=<batch> dirs with _SUCCESS, not adopted by the _commits "
-            "log). Run dbbspark.streaming.linededup.migrate_legacy_index("
-            "spark, index_dir) once before resuming the stream."
-        )
     path = _resolve_snapshot(spark, index_dir, before)
     if path is None:
-        if not _has_protocol_state(spark, index_dir):
-            try:  # pre-versioning flat layout, or first run (missing dir)
-                return spark.read.parquet(index_dir).select("h", "df")
-            except AnalysisException:
-                pass
         return spark.createDataFrame([], "h bigint, df bigint")
     return spark.read.parquet(path).select("h", "df")
 
@@ -395,9 +258,10 @@ def _commit_for_batch(
         tagged.write.partitionBy("batch").parquet(path)
         # an EMPTY snapshot (legitimate: remove_docs_from_line_index can
         # zero the whole index) writes no batch=<id> dir — partition
-        # dirs come from rows — leaving an unpairable version that the
-        # legacy-layout detector would refuse. Materialize the batch dir
-        # with a schema'd empty parquet so resolve/read work unchanged.
+        # dirs come from rows — and `_snapshot_batches` skips a version
+        # without one, so an OLDER snapshot would resolve and the zeroed
+        # counts would silently come back. Materialize the batch dir with
+        # a schema'd empty parquet so resolve/read work unchanged.
         fs, hpath, _jvm = _fs_and_path(spark, path)
         has_batch = fs.exists(hpath) and any(
             st.getPath().getName().startswith("batch=")

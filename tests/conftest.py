@@ -200,9 +200,8 @@ SLOW: dict[str, object] = {
         "test_soak_state_stays_bounded",  # 25s
     },
     "test_streaming_mediadedup.py": {
-        "test_bloom_decisions_identical_and_undecodable_accepted",  # 19s
+        "test_undecodable_accepted_never_indexed",  # 18s
         "test_stream_equals_batch_caller",  # 16s
-        "test_bloom_enabled_mid_stream_covers_prior_corpus",  # 15s
         "test_clip_gate_degenerate_policy",  # 14s
         "test_gate_across_micro_batches",  # 12s
         "test_clip_gate_policy_keeps_live_path_verdicts",  # 12s

@@ -315,7 +315,7 @@ def test_bounded_state_through_delete_compact_cycles(spark, tmp_path):
             victim = f"s{b - 1}"
             remove_from_index(spark, idx, [victim], id_col="mid")
             removed.add(victim)
-            compact_gate_index(spark, idx, reserved_batch=-1)
+            compact_gate_index(spark, idx)
             import shutil
 
             shutil.rmtree(f"{idx}.pre-compact", ignore_errors=True)

@@ -180,27 +180,6 @@ def test_archive_exactly_once_on_crash_replay(spark, area):
     assert t_other not in tok1
 
 
-def test_explicit_batch_token_replay_overwrites(spark, area):
-    """Callers with their own globally-unique batch ids may pass an
-    EXPLICIT token; a replay under the same token must overwrite its own
-    partition just like the derived content-token path. (The streaming
-    path itself derives content tokens — epoch ids restart after a
-    checkpoint reset and are NOT globally unique; see the reset test.)"""
-    import shutil
-
-    cfg = _cfg(area)
-    first = ingest_batch(spark, cfg, batch_token="b7")
-    assert first.archived == 2
-    shutil.rmtree(cfg.registry_path)  # crash window: registry not landed
-    replay = ingest_batch(spark, cfg, batch_token="b7")
-    assert replay.archived == 2
-    arch = spark.read.parquet(cfg.archive_root)
-    assert arch.count() == 2
-    assert {r["batch"] for r in arch.select("batch").distinct().collect()} == {
-        "b7"
-    }
-
-
 def test_streaming_token_unique_across_checkpoint_reset(spark, area):
     """ADVICE r10 (medium): streaming epoch ids restart at 0 after a
     checkpoint reset (and two streams on one archive root each count from
@@ -629,27 +608,3 @@ def test_registry_written_nite_partitioned(spark, area):
     reg = spark.read.parquet(cfg.registry_path)
     assert reg.count() == 3
     assert reg.select("filename").distinct().count() == 3
-
-
-def test_registry_legacy_layout_preserved(spark, area):
-    """An existing UNPARTITIONED registry keeps its layout on append —
-    mixing root data files with nite= dirs would make the dataset
-    unreadable. The probe (`_registry_partitioned`) must return False."""
-    import datetime
-
-    cfg = _cfg(area)
-    spark.createDataFrame(
-        [(
-            "old.fits", "0" * 32, 1, "raw", "20260101",
-            datetime.datetime(2026, 1, 1), None,
-        )],
-        "filename string, md5sum string, filesize long, filetype string, "
-        "nite string, delivery_date timestamp, task_id string",
-    ).write.parquet(cfg.registry_path)
-
-    ingest_batch(spark, cfg)
-    assert not any(
-        d.startswith("nite=") for d in os.listdir(cfg.registry_path)
-    ), "legacy registry layout must be preserved"
-    reg = spark.read.parquet(cfg.registry_path)
-    assert reg.count() == 3  # old.fits + the 2 archived files

@@ -334,164 +334,6 @@ def test_soak_state_stays_bounded(spark, tmp_path):
     assert n_batches * 4 in dfs  # the boiler line: every doc, every batch
 
 
-def test_legacy_layout_raises_then_migrates(spark, tmp_path):
-    """ADVICE r8 (medium): a pre-protocol v=<batch>+_SUCCESS index dir
-    must never silently resolve as EMPTY on in-place upgrade — index_df
-    refuses until migrate_legacy_index backfills the commit protocol,
-    after which the gate resumes with its accumulated counts."""
-    import shutil
-
-    from dbbspark.streaming.linededup import (
-        migrate_legacy_index,
-        process_batch,
-    )
-
-    idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
-    # build a REAL index state, then rewrite it in the legacy layout:
-    # (h, df) rows directly under v=<batch_id> (Spark leaves _SUCCESS),
-    # no _commits log
-    b1 = spark.createDataFrame(
-        [(1, f"{BOILER}\n{BODY1}"), (2, f"{BOILER}\n{BODY2}")],
-        "doc_id long, text string",
-    )
-    process_batch(b1, 0, idx, out)
-    state = [(r["h"], r["df"]) for r in index_df(spark, idx).collect()]
-    shutil.rmtree(idx)
-    spark.createDataFrame(state, "h long, df long").write.parquet(f"{idx}/v=0")
-    with pytest.raises(RuntimeError, match="legacy"):
-        index_df(spark, idx)
-    assert migrate_legacy_index(spark, idx) == {idx: [0]}
-    assert migrate_legacy_index(spark, idx) == {}  # idempotent: no-op
-    got = {r["h"]: r["df"] for r in index_df(spark, idx).collect()}
-    assert got == dict(state)
-    # the gate continues counting on top of the migrated index: the
-    # boiler line sits at df=2 already, so the next batch cuts it
-    b2 = spark.createDataFrame(
-        [(3, f"{BOILER}\n{BODY3}")], "doc_id long, text string"
-    )
-    process_batch(b2, 1, idx, out)
-    texts = {
-        r["doc_id"]: r["text"] for r in spark.read.parquet(out).collect()
-    }
-    assert texts[3] == BODY3
-
-
-def test_legacy_migration_preserves_retry_predecessor(spark, tmp_path):
-    """Migration re-commits the newest TWO legacy snapshots: a stream
-    resuming on a crashed checkpoint re-runs its last batch id and must
-    resolve the snapshot BEFORE it, exactly as under the protocol."""
-    from dbbspark.streaming.linededup import migrate_legacy_index
-
-    idx = str(tmp_path / "idx")
-    spark.createDataFrame(
-        [(11, 1)], "h long, df long"
-    ).write.parquet(f"{idx}/v=3")
-    spark.createDataFrame(
-        [(11, 2), (22, 1)], "h long, df long"
-    ).write.parquet(f"{idx}/v=4")
-    assert migrate_legacy_index(spark, idx) == {idx: [3, 4]}
-    # newest resolves batch 4; the retry of batch 4 resolves batch 3
-    assert {
-        r["h"]: r["df"] for r in index_df(spark, idx).collect()
-    } == {11: 2, 22: 1}
-    assert {
-        r["h"]: r["df"] for r in index_df(spark, idx, before=4).collect()
-    } == {11: 1}
-
-
-def test_legacy_migration_resumes_after_crash_between_commits(spark, tmp_path):
-    """ADVICE r8 (medium): a migration that crashed after committing the
-    older of its two snapshots must not read as "done" on re-run — the
-    _commits log exists, but the newest legacy counts are still only in
-    the legacy dir. index_df refuses, and migrate_legacy_index commits
-    exactly the missing tail (preserving version/batch monotonicity)."""
-    from dbbspark.streaming.linededup import (
-        _commit_for_batch,
-        migrate_legacy_index,
-    )
-
-    idx = str(tmp_path / "idx")
-    spark.createDataFrame([(11, 1)], "h long, df long").write.parquet(
-        f"{idx}/v=3"
-    )
-    spark.createDataFrame(
-        [(11, 2), (22, 1)], "h long, df long"
-    ).write.parquet(f"{idx}/v=4")
-    # simulate the crash state: batch 3 committed, batch 4 not, legacy
-    # dirs still present (deletes only happen after all commits)
-    _commit_for_batch(
-        spark, idx, spark.createDataFrame([(11, 1)], "h long, df long"), 3
-    )
-    with pytest.raises(RuntimeError, match="legacy"):
-        index_df(spark, idx)  # would otherwise resolve batch 3 and lose 4
-    assert migrate_legacy_index(spark, idx) == {idx: [4]}
-    assert {
-        r["h"]: r["df"] for r in index_df(spark, idx).collect()
-    } == {11: 2, 22: 1}
-    assert {
-        r["h"]: r["df"] for r in index_df(spark, idx, before=4).collect()
-    } == {11: 1}
-
-
-def test_legacy_migration_sweeps_orphans_after_crash_before_delete(
-    spark, tmp_path
-):
-    """A crash after both commits but before the legacy-dir deletes
-    leaves orphans resolution ignores; the re-run deletes them and
-    commits nothing new."""
-    import os
-
-    from dbbspark.streaming.linededup import (
-        _commit_for_batch,
-        migrate_legacy_index,
-    )
-
-    idx = str(tmp_path / "idx")
-    spark.createDataFrame([(11, 1)], "h long, df long").write.parquet(
-        f"{idx}/v=3"
-    )
-    spark.createDataFrame([(11, 2)], "h long, df long").write.parquet(
-        f"{idx}/v=4"
-    )
-    _commit_for_batch(
-        spark, idx, spark.createDataFrame([(11, 1)], "h long, df long"), 3
-    )
-    _commit_for_batch(
-        spark, idx, spark.createDataFrame([(11, 2)], "h long, df long"), 4
-    )
-    # both committed: the index resolves without refusal, orphans or not
-    assert {r["h"]: r["df"] for r in index_df(spark, idx).collect()} == {11: 2}
-    assert migrate_legacy_index(spark, idx) == {idx: []}
-    legacy_left = [
-        d
-        for d in os.listdir(idx)
-        if d.startswith("v=")
-        and os.path.exists(os.path.join(idx, d, "_SUCCESS"))
-        and not any(
-            e.startswith("batch=") for e in os.listdir(os.path.join(idx, d))
-        )
-    ]
-    assert legacy_left == []
-    assert {r["h"]: r["df"] for r in index_df(spark, idx).collect()} == {11: 2}
-
-
-def test_legacy_migration_reports_bloom_sibling(spark, tmp_path):
-    """ADVICE r8 (low): a bloom-sibling-only migration is visible in the
-    return value — per-root ids, not [] pretending nothing happened."""
-    from dbbspark.streaming.linededup import (
-        _bloom_root,
-        migrate_legacy_index,
-    )
-
-    idx = str(tmp_path / "idx")
-    bloom = _bloom_root(idx)
-    spark.createDataFrame(
-        [(7, 1)], "h long, df long"
-    ).write.parquet(f"{bloom}/v=2")
-    assert migrate_legacy_index(spark, idx) == {bloom: [2]}
-    assert migrate_legacy_index(spark, idx) == {}
-
-
 def test_bloom_enabled_mid_stream_covers_prior_corpus(spark, tmp_path):
     """ADVICE r9: turning use_bloom on over an index with pre-flag
     history must save a filter covering the FULL index, not the enabling
