@@ -7,6 +7,7 @@ no Python UDFs in any hot path.
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 
 from pyspark.sql import Column, functions as F
 
@@ -43,6 +44,28 @@ def compile_template(pattern: str) -> Column:
 def template_columns(pattern: str) -> list[str]:
     """Column names referenced by a template (for validation/partitioning)."""
     return _TEMPLATE_RE.findall(pattern)
+
+
+# --- text decoding and expression binding ----------------------------------
+
+def utf8_text(col: Column | str) -> Column:
+    """Binary → string that never raises: each malformed UTF-8 sequence
+    becomes U+FFFD exactly as Python's ``bytes.decode("utf-8",
+    "replace")`` does (maximal subparts, surrogate encodings included).
+    `F.decode(col, "UTF-8")` raises MALFORMED_CHARACTER_CODING on Spark 4,
+    and a bare ``cast(binary as string)`` keeps the raw bytes, whose later
+    Java decode turns an encoded surrogate into one U+FFFD, not three."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.make_valid_utf8(c.cast("string"))
+
+
+def let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row, however often
+    ``body`` reads it. Spark shares no common subexpression inside CASE
+    branches or higher-order-function lambdas, so an expensive value read
+    twice there is computed twice; a transform over a one-element array
+    binds it to a lambda variable instead."""
+    return F.transform(F.array(value), body)[0]
 
 
 # --- vector math over array<float>/array<double> (SURVEY.md §2.11 C3) ------

@@ -4,9 +4,11 @@
 The reference treats file bytes as opaque except for a per-filetype plugin
 that extracts a declared keyword schema from them (FITS headers,
 `etc/decam_src_keywords.txt`; invoked at `bin/save_DBB_stagein_to_DBB.py:160`).
-The Spark-native form: a `binary` column travels with the row; extraction
-is an Arrow-batched transform over `mapInPandas` producing a typed struct
-next to the bytes.
+The Spark-native form: a `binary` column travels with the row; keyword
+extraction is one projection producing a typed struct next to the bytes —
+Catalyst expressions for the default `KEY = value` decoder, one scalar
+pandas UDF for any other decoder. Media decoding is an Arrow-batched
+transform over `mapInPandas`.
 
 Decoders for real media formats (image resize, audio resample, frame
 sampling) need libraries not present in this container; they are STUBBED
@@ -17,7 +19,7 @@ and tested.
 Scale notes:
 - `binaryFile` prunes `content` when unprojected, so metadata-only plans
   never read bytes;
-- extraction runs per Arrow batch (`spark.sql.execution.arrow
+- Python extraction runs per Arrow batch (`spark.sql.execution.arrow
   .maxRecordsPerBatch` bounds memory per task), not per row;
 - keep bytes out of shuffles: extract → drop `content` → then join/agg.
 """
@@ -29,8 +31,11 @@ from collections.abc import Callable, Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+
+from ..functions import let, utf8_text
+from ..plans.keywords import KeywordSchema
 
 # ---------------------------------------------------------------------------
 # Binary document reader
@@ -53,11 +58,24 @@ def read_binary_docs(
 
 
 # ---------------------------------------------------------------------------
-# Header decoders + metadata extraction (JVM-free parse in pandas over
-# Arrow batches). The decoder is PLUGGABLE: any Callable[[bytes],
-# Mapping[str, str]] drops into `extract_kv_metadata`, mirroring the
-# reference's per-filetype plugin dispatch
+# Header decoders + metadata extraction. The decoder is PLUGGABLE: any
+# Callable[[bytes], Mapping[str, str]] drops into `extract_kv_metadata`,
+# mirroring the reference's per-filetype plugin dispatch
 # (bin/save_DBB_stagein_to_DBB.py:160, schema etc/decam_src_keywords.txt).
+# The default `kv_text_decode` is compiled to Catalyst expressions
+# (`_native_kv_col`), so it never starts a Python worker; any other
+# decoder runs as one scalar pandas UDF (`_udf_kv_col`).
+
+# The line boundaries of `str.splitlines` as a Java regex, and the
+# whitespace set of `str.strip` (every `str.isspace` character), so the
+# native decoder splits and strips exactly as `kv_text_decode` does.
+_LINE_BREAKS = r"\r\n|[\n\x0B\x0C\r\x1C-\x1E\x85\u2028\u2029]"
+_WHITESPACE = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+    "\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200a"
+    "\u2028\u2029\u202f\u205f\u3000"
+)
+
 
 def kv_text_decode(raw: bytes) -> dict[str, str]:
     """Default header decoder: `KEY = value` text lines (the fixture
@@ -116,9 +134,10 @@ def extract_kv_metadata(
 
     ``keywords`` maps KEYWORD -> required? (the R flag of
     `etc/decam_src_keywords.txt`; SURVEY.md §1.1.2). ``decoder`` turns one
-    file's bytes into {KEYWORD: value} — `kv_text_decode` (default),
-    `fits_header_decode` for real FITS HDUs, or any custom callable (it is
-    closed over by the Arrow workers, so it must be picklable). A decoder
+    file's bytes into {KEYWORD: value} — `kv_text_decode` (default,
+    compiled to Catalyst expressions), `fits_header_decode` for real FITS
+    HDUs, or any custom callable (run as a pandas UDF: it is closed over by
+    the Arrow workers, so it must be picklable). A decoder
     raising on malformed bytes yields an empty header for that row — the
     row then reports every required key missing and ingest routes it to
     quarantine instead of aborting, unlike the reference's SystemExit at
@@ -128,39 +147,114 @@ def extract_kv_metadata(
     per keyword plus ``meta_missing_required`` listing absent R-flagged
     keys (joined as a sorted comma string downstream where driver
     hashing needs it)."""
-    meta_schema = T.StructType(
-        [T.StructField(k.lower(), T.StringType(), True) for k in keywords]
+    spec = KeywordSchema(
+        flags=tuple((k, "R" if req else "Y") for k, req in keywords.items()),
+        decoder=decoder,
     )
-    out_schema = T.StructType(
-        df.schema.fields
-        + [
-            T.StructField("meta", meta_schema, True),
+    # The struct gets its own projection so both fields read one
+    # evaluation: Spark does not share it between two output columns.
+    kv = "_kv_metadata"
+    return (
+        df.select("*", keyword_metadata_col(spec, F.col(content_col)).alias(kv))
+        .select(
+            "*",
+            F.col(kv)["meta"].alias("meta"),
+            F.col(kv)["missing"].alias("meta_missing_required"),
+        )
+        .drop(kv)
+    )
+
+
+def keyword_metadata_col(spec: KeywordSchema, content: Column) -> Column:
+    """One file's declared keywords as ``struct<meta, missing>``: ``meta``
+    has one nullable string field per keyword (lowercased name), and
+    ``missing`` lists the R-flagged keywords the header lacks, in schema
+    order. NULL content reads as an empty header.
+
+    ``spec.decoder`` None or `kv_text_decode` compiles to Catalyst
+    expressions (no Python worker); any other decoder runs as one scalar
+    pandas UDF — guard ``content`` with a CASE (``when(filetype = ft,
+    content)``) so only that filetype's bytes are shipped to Python."""
+    if spec.decoder is None or spec.decoder is kv_text_decode:
+        return _native_kv_col(spec, content)
+    return _udf_kv_col(spec, content)
+
+
+def _strip(c: Column) -> Column:
+    return F.trim(c, F.lit(_WHITESPACE))
+
+
+def _native_kv_col(spec: KeywordSchema, content: Column) -> Column:
+    """`kv_text_decode` + keyword lookup as Catalyst expressions.
+
+    `utf8_text` decodes as ``decode("utf-8", "replace")`` does, the split
+    and strip use the `str.splitlines` / `str.strip` character sets, and
+    the last line per keyword wins, as in the dict the Python decoder
+    builds. Keys are matched with Spark's `upper`, which agrees with
+    `str.upper` except on the few code points whose case mapping is newer
+    than Python's Unicode database — no ASCII keyword is affected."""
+    lines = F.filter(
+        F.split(utf8_text(content), _LINE_BREAKS), lambda ln: ln.contains("=")
+    )
+    entries = F.transform(
+        lines,
+        lambda ln: F.struct(
+            F.upper(_strip(F.substring_index(ln, "=", 1))).alias("k"),
+            _strip(F.regexp_replace(ln, "^[^=]*=", "")).alias("v"),
+        ),
+    )
+
+    def last(es: Column, key: str) -> Column:
+        return F.try_element_at(F.filter(es, lambda e: e["k"] == key), F.lit(-1))["v"]
+
+    keys, required = [k for k, _ in spec.flags], spec.required
+
+    def build(es: Column) -> Column:
+        missing = (
+            F.array_compact(
+                F.array(*[F.when(last(es, k).isNull(), F.lit(k)) for k in required])
+            )
+            if required
+            else F.array().cast("array<string>")
+        )
+        return F.struct(
+            F.struct(*[last(es, k).alias(k.lower()) for k in keys]).alias("meta"),
+            missing.alias("missing"),
+        )
+
+    # every keyword reads `entries`; bind it so the split runs once
+    return let(entries, build)
+
+
+def _udf_kv_col(spec: KeywordSchema, content: Column) -> Column:
+    """A custom decoder as one scalar pandas UDF returning
+    ``struct<meta, missing>``. The decoder is closed over by the Arrow
+    workers, so it must be picklable."""
+    keys, required, decoder = [k for k, _ in spec.flags], spec.required, spec.decoder
+    out_type = T.StructType(
+        [
             T.StructField(
-                "meta_missing_required", T.ArrayType(T.StringType()), True
+                "meta",
+                T.StructType([T.StructField(k.lower(), T.StringType()) for k in keys]),
             ),
+            T.StructField("missing", T.ArrayType(T.StringType())),
         ]
     )
-    required = [k for k, req in keywords.items() if req]
-    keys = list(keywords)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas, missings = [], []
-            for raw in pdf[content_col]:
-                kv: dict[str, str] = {}
-                if raw is not None:
-                    try:
-                        kv = dict(decoder(bytes(raw)))
-                    except Exception:  # malformed file → quarantine, not abort
-                        kv = {}
-                metas.append({k.lower(): kv.get(k) for k in keys})
-                missings.append([k for k in required if kv.get(k) is None])
-            pdf = pdf.copy()
-            pdf["meta"] = metas
-            pdf["meta_missing_required"] = missings
-            yield pdf
+    def extract(raws: pd.Series) -> pd.DataFrame:
+        metas, missings = [], []
+        for raw in raws:
+            kv: dict[str, str] = {}
+            if raw is not None:
+                try:
+                    kv = dict(decoder(bytes(raw)))
+                except Exception:  # malformed file → quarantine, not abort
+                    kv = {}
+            metas.append({k.lower(): kv.get(k) for k in keys})
+            missings.append([k for k in required if kv.get(k) is None])
+        return pd.DataFrame({"meta": metas, "missing": missings})
 
-    return df.mapInPandas(extract, schema=out_schema)
+    return F.pandas_udf(extract, out_type)(content)
 
 
 # ---------------------------------------------------------------------------

@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions import utf8_text
+
 NOTIFY_SUFFIX = ".dbb"
 
 # key = value lines; keys lowercased (bin/save_DBB_stagein_to_DBB.py:49-56).
@@ -88,7 +90,7 @@ def parse_notify_binary(df: DataFrame) -> DataFrame:
     notify = df.select(
         F.col("path").alias("notify_path"),
         F.col("modificationTime").alias("delivery_ts"),
-        _kv_map_col(F.decode(F.col("content"), "UTF-8")).alias("notify"),
+        _kv_map_col(utf8_text("content")).alias("notify"),
     )
     return notify.withColumn(
         "data_name",

@@ -8,7 +8,10 @@ commit, ack; failures → rollback + quarantine move + DBB_BAD_FILE insert.
 
 Spark-native shape (SURVEY.md §3.1): the per-file loop disappears. One
 declarative pipeline classifies the whole batch, then a single persisted
-DataFrame feeds three sinks:
+DataFrame feeds three sinks. Metadata extraction is one CASE on filetype
+inside the classifying projection: the default kv decoder is Catalyst
+expressions (no Python worker), a custom decoder one scalar pandas UDF
+over only its filetype's bytes — no per-filetype branch, no union:
 
   pairs → filetype (P1) → md5 (F11/P3) → metadata extract (U3) →
   registry anti-join (J8/ST8) → reject-reason CASE (F16) →
@@ -60,11 +63,12 @@ import os
 from dataclasses import dataclass, field
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..plans.keywords import KeywordSchema
-from ..sources.multimodal import extract_kv_metadata
+from ..functions import let
+from ..sources.multimodal import keyword_metadata_col
 from ..sources.notify import NOTIFY_SUFFIX, parse_notify_binary, read_stagein_pairs
 
 # Fixed schema of the binaryFile source (needed explicitly for readStream).
@@ -171,37 +175,34 @@ def classify_pairs(
         )
     )
 
-    # Metadata extraction per filetype with a declared schema (U3). One
-    # union branch per schema'd filetype keeps each mapInPandas schema
-    # static; filetypes without a declared schema pass through.
-    schemad = [ft for ft in cfg.keyword_schemas if cfg.keyword_schemas[ft].flags]
-    if schemad:
-        branches = []
-        passthrough = df.where(
-            ~F.col("filetype").isin(schemad) | F.col("filetype").isNull()
+    # Metadata extraction (U3): one CASE on filetype, one branch per
+    # filetype with a declared schema; other filetypes get NULL metadata.
+    # Each branch binds its decoder's struct once (`let`) and renders it
+    # to the common branch type; the CASE gets its own projection so the
+    # two columns below read one evaluation.
+    meta = F.lit(None).cast("struct<json:string,missing:array<string>>")
+    for ft, spec in reversed(cfg.keyword_schemas.items()):
+        if not spec.flags:
+            continue
+        hit = F.col("filetype") == ft
+        branch = let(
+            keyword_metadata_col(spec, F.when(hit, F.col("content"))),
+            lambda kv: F.struct(
+                F.to_json(kv["meta"]).alias("json"),
+                kv["missing"].alias("missing"),
+            ),
         )
-        for ft in schemad:
-            spec = cfg.keyword_schemas[ft]
-            dec = {"decoder": spec.decoder} if spec.decoder else {}
-            branch = extract_kv_metadata(
-                df.where(F.col("filetype") == ft), spec.as_required_map(), **dec
-            )
-            branches.append(
-                branch.withColumn("meta_json", F.to_json("meta")).drop("meta")
-            )
-        passthrough = passthrough.withColumn(
-            "meta_json", F.lit(None).cast("string")
-        ).withColumn(
-            "meta_missing_required", F.lit(None).cast("array<string>")
+        meta = F.when(hit, branch).otherwise(meta)
+    df = (
+        df.withColumn("_meta", meta)
+        .withColumns(
+            {
+                "meta_json": F.col("_meta.json"),
+                "meta_missing_required": F.col("_meta.missing"),
+            }
         )
-        df = branches[0]
-        for b in branches[1:]:
-            df = df.unionByName(b)
-        df = df.unionByName(passthrough.select(*df.columns))
-    else:
-        df = df.withColumn("meta_json", F.lit(None).cast("string")).withColumn(
-            "meta_missing_required", F.lit(None).cast("array<string>")
-        )
+        .drop("_meta")
+    )
 
     # Duplicate gate (J8/ST8): left join against registered names. The
     # indicator column avoids a second pass that a semi+anti pair would
@@ -226,20 +227,31 @@ def classify_pairs(
     return df.withColumn("reject_reason", reason).drop("_registered")
 
 
-def _batch_token(classified: DataFrame) -> str:
-    """Deterministic, order/partition-independent token for a batch:
-    a commutative hash-sum over the batch's data names (+ row count), so
-    a crash replay of the SAME batch derives the SAME token and its
-    dynamic-partition overwrite replaces the crashed attempt's rows.
-    Shuffle-free (one partial-aggregated sum — no collect_list row that
-    would grow with batch size)."""
+def _token_aggs() -> list[Column]:
+    """Aggregates behind the batch token: a commutative hash-sum over the
+    batch's data names plus the row count. Summed over any grouping they
+    give the whole-batch values, so `_write_sinks` derives the token from
+    its per-reason counting aggregate instead of a job of its own."""
     from ..operators.dedup import md5_int_col
 
-    row = classified.agg(
+    return [
         F.sum(md5_int_col(F.col("data_name")) % F.lit(1_000_000_007)).alias("s"),
         F.count("*").alias("n"),
-    ).first()
-    return f"c{(row['s'] or 0) % (1 << 60):x}n{row['n']}"
+    ]
+
+
+def _token(rows: list) -> str:
+    """Deterministic, order/partition-independent batch token from
+    `_token_aggs` rows (any grouping), so a crash replay of the SAME batch
+    derives the SAME token and its dynamic-partition overwrite replaces
+    the crashed attempt's rows."""
+    s = sum(r["s"] or 0 for r in rows)
+    return f"c{s % (1 << 60):x}n{sum(r['n'] for r in rows)}"
+
+
+def _batch_token(df: DataFrame) -> str:
+    """The batch token of ``df`` from one global aggregate."""
+    return _token(df.agg(*_token_aggs()).collect())
 
 
 def _write_sinks(
@@ -249,14 +261,18 @@ def _write_sinks(
 ) -> IngestResult:
     """Fan the classified batch into archive + registry + quarantine.
 
-    The content-hash ``_batch_token`` keys the archive dynamic-partition
+    The content-hash batch token keys the archive dynamic-partition
     overwrite (crash-replay idempotence, module docstring); the
     streaming and cron/replay paths all go through here."""
     classified = classified.withColumn(
         "task_id", F.lit(task_id).cast("string")
     ).persist()
     try:
-        batch_token = _batch_token(classified)
+        # One aggregation yields the token and the per-reason counts
+        # (None = valid): at most six rows, never one per file.
+        counts = classified.groupBy("reject_reason").agg(*_token_aggs()).collect()
+        batch_token = _token(counts)
+        by_reason = {r["reject_reason"]: r["n"] for r in counts}
         valid = classified.where(F.col("reject_reason").isNull())
         rejected = classified.where(F.col("reject_reason").isNotNull())
 
@@ -330,12 +346,6 @@ def _write_sinks(
             "append"
         ).parquet(cfg.quarantine_path)
 
-        by_reason = {
-            r["reject_reason"]: r["cnt"]
-            for r in classified.groupBy("reject_reason")
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        }
         archived = by_reason.pop(None, 0)
 
         # S10: registry append (no bytes — narrow rows). MUST be the LAST
@@ -380,11 +390,11 @@ def ingest_batch(
     append derives the same content-hash batch token and its dynamic
     overwrite replaces the crashed attempt's archive rows (both tested
     in tests/test_ingest.py). Streaming derives the same content token."""
-    # Persist the paired batch: the valid/missing union and the
-    # per-filetype metadata branches each re-derive from it, and without a
-    # cache every branch re-reads the stage-in files (measured 3× file
-    # I/O). MEMORY_AND_DISK (default) spills oversized batches; batch size
-    # itself is bounded by the streaming trigger (maxFilesPerTrigger).
+    # Persist the paired batch: an action that misses the persisted
+    # classification (see _write_sinks) re-derives from it instead of
+    # re-reading the stage-in files. MEMORY_AND_DISK (default) spills
+    # oversized batches; batch size itself is bounded by the streaming
+    # trigger (maxFilesPerTrigger).
     pairs = read_stagein_pairs(
         spark, cfg.notify_dir, cfg.delivery_dir, notify_df=notify_df
     ).persist()
@@ -426,7 +436,7 @@ def start_ingest_stream(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         notify = parse_notify_binary(batch_df)
-        # The content-hash token (_batch_token) is derived inside
+        # The content-hash token (_token) is derived inside
         # _write_sinks, exactly as in the cron path. The epoch id
         # (f"b{batch_id}") is NOT a safe token: epoch ids restart at 0
         # after a checkpoint reset, and two streams sharing one archive

@@ -553,6 +553,45 @@ def test_duplicate_notify_keys_last_wins_not_crash(spark, area):
     assert res.archived == 3  # the two originals + this one
 
 
+def test_non_utf8_notify_does_not_abort_batch(spark, area):
+    """Malformed UTF-8 in a notify file used to raise
+    MALFORMED_CHARACTER_CODING in the notify parse (Spark 4's strict
+    `decode`) and fail the whole batch. It decodes leniently now: the file
+    beside it and the file itself are decided as without the bad bytes."""
+    from dbbspark.sources.notify import read_notify_dir
+
+    data = b"EXPNUM = 10\nOBSTYPE = object\npayload"
+    md5 = hashlib.md5(data).hexdigest()
+    _write(os.path.join(area, "delivery", "DECam_00000010.fits"), data)
+    _write(
+        os.path.join(area, "notify", "DECam_00000010.fits.dbb"),
+        b"note = \xff\xfe\n" + f"md5sum = {md5}\n".encode(),
+    )
+    notify = read_notify_dir(spark, os.path.join(area, "notify"))
+    row = notify.where(F.col("data_name") == "DECam_00000010.fits").collect()[0]
+    assert row["declared_md5"] == md5
+    assert row["notify"]["note"] == "\ufffd\ufffd"
+
+    cfg = _cfg(area)
+    res = ingest_batch(spark, cfg)
+    assert res.archived == 3  # the two originals + the malformed-notify file
+    assert res.by_reason == {
+        REASON_CHECKSUM: 1,
+        REASON_UNKNOWN_FILETYPE: 1,
+        REASON_MISSING_HEADER: 1,
+        REASON_MISSING_DATA: 1,
+    }
+    names = {
+        r["filename"]
+        for r in spark.read.parquet(cfg.archive_root).select("filename").collect()
+    }
+    assert names == {
+        "DECam_00000001.fits",
+        "manifest_SN_X1.json",
+        "DECam_00000010.fits",
+    }
+
+
 def test_replay_quarantine_after_fix(spark, area):
     """The operator workflow: a checksum-mismatch file is quarantined;
     the upstream re-delivers a corrected notify file; replay archives it.

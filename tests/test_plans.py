@@ -48,10 +48,59 @@ def test_jvm_only_queries_have_no_python(spark, sf_dir):
     # scalar/join/agg layers must stay JVM pipelines (AQE hides codegen
     # markers pre-execution, so assert the absence of Python eval nodes)
     for name in ("q_group_count", "q_window_dedup", "q_string_funcs",
-                 "q_reconcile_anti", "q_rollup"):
+                 "q_reconcile_anti", "q_rollup", "q_metadata_extract"):
         plan = plan_of(spark, sf_dir, name)
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, name
         assert "mapInPandas" not in plan and "FlatMapGroupsInPandas" not in plan, name
+
+
+def _classify_plan(spark, tmp_path, schema) -> str:
+    """Executed plan of classify_pairs over an in-memory pairs frame (no
+    file scan, so any Union or Python node comes from classification)."""
+    from dbbspark.streaming.ingest import IngestConfig, classify_pairs
+
+    pairs = spark.createDataFrame(
+        [
+            ("a.fits", "/d/a.fits", 9, b"EXPNUM = 1", "/n/a.fits.dbb", None, {}, None),
+            ("b.json", "/d/b.json", 2, b"{}", "/n/b.json.dbb", None, {}, None),
+        ],
+        "data_name string, data_path string, filesize bigint, content binary, "
+        "notify_path string, delivery_ts timestamp, notify map<string,string>, "
+        "declared_md5 string",
+    )
+    root = str(tmp_path)
+    cfg = IngestConfig(
+        notify_dir=root,
+        delivery_dir=root,
+        archive_root=root + "/archive",
+        registry_path=root + "/registry",
+        quarantine_path=root + "/quarantine",
+        keyword_schemas={"raw": schema},
+    )
+    return classify_pairs(spark, cfg, pairs)._jdf.queryExecution().executedPlan().toString()
+
+
+def test_classify_default_decoder_is_one_jvm_projection(spark, tmp_path):
+    """The built-in kv decoder compiles to Catalyst: classification runs
+    no Python worker and no per-filetype union branch."""
+    from dbbspark.plans.keywords import parse_keyword_csv
+
+    plan = _classify_plan(spark, tmp_path, parse_keyword_csv("EXPNUM,R,N\nOBSTYPE,Y,N\n"))
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "Union"):
+        assert node not in plan, (node, plan)
+
+
+def test_classify_custom_decoder_is_one_arrow_udf(spark, tmp_path):
+    """A custom decoder runs as exactly one scalar pandas UDF inside the
+    same projection — still no union, no mapInPandas."""
+    from dbbspark.plans.keywords import parse_keyword_csv
+    from dbbspark.sources.multimodal import fits_header_decode
+
+    schema = parse_keyword_csv("EXPNUM,R,N\n").with_decoder(fits_header_decode)
+    plan = _classify_plan(spark, tmp_path, schema)
+    assert plan.count("ArrowEvalPython") == 1, plan
+    for node in ("MapInPandas", "BatchEvalPython", "Union"):
+        assert node not in plan, (node, plan)
 
 
 def test_anti_join_broadcasts(spark, sf_dir):

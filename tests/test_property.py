@@ -6,7 +6,7 @@ hand-written cases miss."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from dbbspark.operators.bpe import END_WORD, apply_bpe, train_bpe, word_counts
@@ -578,3 +578,84 @@ def test_char_weighted_fractions_match_python_reference(spark, arrs):
             if tot else 0.0
         )
         assert got[i] == (dup_ref, top_ref), (a, got[i], dup_ref, top_ref)
+
+
+# Header text built line by line so most lines hit a declared keyword:
+# keys differing only by case, Unicode and control spaces around keys and
+# values, `=` inside values, malformed UTF-8 inside values (lone bytes,
+# encoded surrogates, truncated, overlong and out-of-range sequences),
+# and every str.splitlines boundary (incl. \r\n, \x0b, \x0c, \x1c-\x1e,
+# U+0085, U+2028) between lines.
+_KV_KEYS = [b"EXPNUM", b"expnum", b"ExpNum", b"OBSTYPE", b"A", b"a", b"X"]
+_KV_PADS = [
+    b" ", b"\t", b"\x1f", "\xa0".encode(), "\u2003".encode(), "\u3000".encode()
+]
+_KV_VALUES = [
+    b"v", b"7", b"=", b"b=c", b" ", "\u2003".encode(),
+    b"\xff", b"\xfe", b"\xed\xa0\x80", b"\xed\xbf\xbf", b"\xe2\x82",
+    b"\xc0\xaf", b"\xf0\x9f\x98", b"\xf4\x90\x80\x80",
+]
+_KV_BREAKS = [
+    b"\r\n", b"\n", b"\r", b"\x0b", b"\x0c", b"\x1c", b"\x1d", b"\x1e",
+    "\u0085".encode(), "\u2028".encode(),
+]
+
+
+def _joined(parts_st):
+    return st.lists(parts_st, max_size=4).map(b"".join)
+
+
+_kv_pad_st = _joined(st.sampled_from(_KV_PADS))
+_kv_line_st = st.builds(
+    lambda *parts: b"".join(parts),
+    _kv_pad_st,
+    st.one_of(st.sampled_from(_KV_KEYS), st.binary(max_size=3)),
+    _kv_pad_st,
+    st.sampled_from([b"=", b"=", b""]),
+    _kv_pad_st,
+    _joined(st.one_of(st.sampled_from(_KV_VALUES), st.binary(max_size=2))),
+    _kv_pad_st,
+    st.sampled_from(_KV_BREAKS),
+)
+kv_content_st = st.one_of(
+    st.none(), st.lists(_kv_line_st, min_size=1, max_size=6).map(b"".join)
+)
+
+
+@given(contents=st.lists(kv_content_st, min_size=8, max_size=24))
+@example(
+    contents=[
+        None,
+        b"A = \xed\xa0\x80x\r\nexpnum=1=2\x0bEXPNUM \xe2\x80\x83= 3\xff\n",
+        b"\xc2\x85obstype=\xe2\x82\xe2\x80\xa8a=\xf4\x90\x80\x80\x1c",
+    ]
+)
+@settings(**SETTINGS)
+def test_native_kv_extraction_matches_python_decoder(spark, contents):
+    """The Catalyst-compiled default decoder must extract exactly what
+    `kv_text_decode` does on arbitrary bytes: same `to_json(meta)`, same
+    missing-required list. The reference is the Python decoder itself,
+    run through the pandas-UDF path (a wrapper makes it a custom
+    decoder)."""
+    from dbbspark.sources.multimodal import extract_kv_metadata, kv_text_decode
+
+    keywords = {"EXPNUM": True, "OBSTYPE": False, "A": True}
+    df = spark.createDataFrame(list(enumerate(contents)), "i int, content binary")
+
+    def extracted(decoder) -> dict:
+        out = extract_kv_metadata(df, keywords, decoder=decoder)
+        return {
+            r["i"]: (r["j"], r["m"])
+            for r in out.select(
+                "i",
+                F.to_json("meta").alias("j"),
+                F.col("meta_missing_required").alias("m"),
+            ).collect()
+        }
+
+    native = extracted(kv_text_decode)
+    python = extracted(lambda raw: kv_text_decode(raw))
+    assert native == python
+    for i, raw in enumerate(contents):
+        kv = kv_text_decode(raw) if raw is not None else {}
+        assert native[i][1] == [k for k in ("EXPNUM", "A") if k not in kv], raw
